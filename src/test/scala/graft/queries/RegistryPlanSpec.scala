@@ -59,6 +59,12 @@ class RegistryPlanSpec extends SparkSuite {
   // extra columns through fails here. The third element restricts the
   // assert to scans of that table's file (memo-parquet re-reads and
   // other tables in the same plan are exempt).
+  //
+  // q123 reads lineitem only in the session-memoized co-purchase build,
+  // which runs before the query is planned: its pin checks the plan of
+  // that build's basket frame, the artifact's one lineitem scan.
+  private val buildFrames = Map[String, () => org.apache.spark.sql.DataFrame](
+    "q123_copurchase_similarity" -> (() => JoinQueries.copurchaseBaskets(spark, dir)))
   for ((name, table, expected) <- Seq(
       ("q91_vocab_coverage", "documents", Set("text")),
       ("q94_quality_length_corr", "documents", Set("text", "lang")),
@@ -71,7 +77,7 @@ class RegistryPlanSpec extends SparkSuite {
       // join touches exactly the key + name dimension columns.
       // (q141 has no pin: it reads only the session-memoized
       // co-purchase edge parquet — its lineitem pruning is the q123
-      // pin, which builds that memo.)
+      // pin, which covers that memo's build.)
       ("q106_source_overlap", "documents", Set("text", "source")),
       ("q139_fuzzy_join_k2", "supplier", Set("s_suppkey", "s_name"))))
     test(s"$name reads only ${expected.mkString("+")} from $table") {
@@ -89,8 +95,8 @@ class RegistryPlanSpec extends SparkSuite {
             scansOf(m.relation.cachedPlan)
           case _ => Nil
         }
-      val scans = scansOf(
-        SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+      val frame = buildFrames.getOrElse(name, () => SparkEntry.queries(name)(spark, dir))
+      val scans = scansOf(frame().queryExecution.executedPlan)
         .filter(_.relation.location.rootPaths
           .exists(_.toString.contains(s"$table.parquet")))
       assert(scans.nonEmpty, s"no FileSourceScanExec over $table found")
